@@ -1,258 +1,23 @@
 #!/usr/bin/env python3
-"""Generate sf1-scale documents/embeddings for the heavy-dedup sweep.
+"""Generate the sf1 tables offline: all ten tables at 10x the sf0.1 rows,
+with the hot structures the sf1 sweep exists to test (a hot city of
+3 x 2,000 coincident customers, a hot near-identical document family of
+2,000, a hot embedding cluster of 5,000). See dev/sf1_sweep.md.
 
-The driver testdata stops at sf0.1 (5,000 docs / 2,000 embeddings); the
-round-7 verdict asked for the dedup/ANN family to be validated at sf1
-(dev/sf1_sweep.md). This generator mirrors the driver tables' shape
-(same vocab, lengths 10-100 words, same lang/source mix, same schema) at
-10x the rows, and ADDS the structures whose asymptotics the sweep exists
-to test:
+A thin wrapper over graftbench/gen.py, the one generator: fraction 1.0,
+seed 20260814.
 
-- documents: 50,000 rows; ~2% exact duplicates, ~5% mutated near-dups,
-  plus ONE hot near-identical family of 2,000 docs (a boilerplate page) —
-  the case that blows up any uncapped LSH bucket / candidate self-join.
-- embeddings: 20,000 rows; one hot cluster of 5,000 near-identical
-  vectors (cosine >= 0.999) — the case semanticDedup's hot-cluster cap
-  and the cosine-LSH bucket cap exist for.
-
-Deterministic (seed 20260814). Output: /tmp/graft_sf1/{documents,embeddings}.parquet
+Usage: python3 dev/gen_sf1.py [out_dir]   (default /tmp/graft_sf1)
 """
 import os
-import random
+import sys
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-OUT = "/tmp/graft_sf1"
-SEED = 20260814
-
-VOCAB = ("batch part spark line column order small sort fast value scan a "
-         "hash slow group agg filter query big key window row table stream "
-         "merge data join plan shuffle page").split()
-LANGS = ["en", "de", "zh", "fr", "es"]
-LANG_W = [0.41, 0.1475, 0.1475, 0.1475, 0.1475]
-
-
-def gen_documents(rnd):
-    texts = []
-    n_total = 50_000
-    hot_n = 2_000
-    # hot family: one 60-word boilerplate with <=2 word substitutions
-    base = [rnd.choice(VOCAB) for _ in range(60)]
-    for _ in range(hot_n):
-        t = list(base)
-        for _ in range(rnd.randint(0, 2)):
-            t[rnd.randrange(len(t))] = rnd.choice(VOCAB)
-        texts.append(" ".join(t))
-    while len(texts) < n_total:
-        r = rnd.random()
-        if texts and r < 0.02:            # exact duplicate of an earlier doc
-            texts.append(texts[rnd.randrange(len(texts))])
-        elif texts and r < 0.07:          # near-dup: copy + 1-3 word edits
-            t = texts[rnd.randrange(len(texts))].split()
-            for _ in range(rnd.randint(1, 3)):
-                t[rnd.randrange(len(t))] = rnd.choice(VOCAB)
-            texts.append(" ".join(t))
-        else:                             # fresh word salad, 10-100 words
-            n = rnd.randint(10, 100)
-            texts.append(" ".join(rnd.choice(VOCAB) for _ in range(n)))
-    rnd.shuffle(texts)
-    rows = {
-        "doc_id": list(range(n_total)),
-        "text": texts,
-        "lang": rnd.choices(LANGS, weights=LANG_W, k=n_total),
-        "source": [f"src{rnd.randrange(20)}" for _ in range(n_total)],
-        "n_chars": [len(t) for t in texts],
-    }
-    schema = pa.schema([("doc_id", pa.int64()), ("text", pa.string()),
-                        ("lang", pa.string()), ("source", pa.string()),
-                        ("n_chars", pa.int64())])
-    pq.write_table(pa.table(rows, schema=schema), f"{OUT}/documents.parquet")
-
-
-def gen_embeddings(nprng):
-    n_total, hot_n, dim = 20_000, 5_000, 64
-    base = nprng.standard_normal(dim).astype(np.float32)
-    hot = base[None, :] + 0.005 * nprng.standard_normal((hot_n, dim)).astype(np.float32)
-    rest = nprng.standard_normal((n_total - hot_n, dim)).astype(np.float32)
-    vecs = np.concatenate([hot, rest])
-    nprng.shuffle(vecs)
-    arr = pa.array([v.tolist() for v in vecs], type=pa.list_(pa.float32()))
-    tbl = pa.table({
-        "vec_id": pa.array(range(n_total), type=pa.int64()),
-        "embedding": arr,
-        "label": pa.array((nprng.integers(0, 10, n_total)).tolist(), type=pa.int32()),
-    })
-    pq.write_table(tbl, f"{OUT}/embeddings.parquet")
-
-
-def gen_events(nprng):
-    """1M events mirroring the driver table's shape (timestamp[us] naive =
-    TIMESTAMP_NTZ under Spark 4, same type mix / value range / user ids),
-    plus the skew the quantile-histogram family should absorb: one event
-    type ('error') gets a heavy-tailed lognormal value distribution so the
-    log-bucket histogram sees both dense low buckets and a sparse tail."""
-    n = 1_000_000
-    start_us = 1_704_067_200_000_000  # 2024-01-01 UTC in epoch micros
-    ts = start_us + nprng.integers(0, 30 * 86_400_000_000, n)
-    types = np.array(["click", "error", "purchase", "signup", "view"])
-    tix = nprng.integers(0, 5, n)
-    value = np.round(nprng.uniform(0.0, 500.0, n), 2)
-    heavy = np.round(np.minimum(nprng.lognormal(2.0, 1.5, n), 500.0), 2)
-    value = np.where(tix == 1, heavy, value)
-    tbl = pa.table({
-        "event_id": pa.array(range(n), type=pa.int64()),
-        "ts": pa.array(ts, type=pa.timestamp("us")),
-        "user_id": pa.array(nprng.integers(0, 15_000, n), type=pa.int64()),
-        "event_type": pa.array(types[tix].tolist(), type=pa.string()),
-        "value": pa.array(value, type=pa.float64()),
-        "props": pa.array(['{"k": %d}' % k for k in nprng.integers(0, 100, n)],
-                          type=pa.string()),
-    })
-    pq.write_table(tbl, f"{OUT}/events.parquet")
-
-
-def gen_spatial(nprng):
-    """10x sf0.1 spatial tables for the spatial-core sweep (q6/q7/q20/q40).
-
-    Geometry is DERIVED from keys (customerPts: x = 17k % 1000,
-    y = 31k % 1000 — 1000 distinct sites, period 1000 in k), so skew is
-    planted through KEY RESIDUES: 150,000 customers = 144,000 background
-    keys spread over all residues (~144 coincident points per site, the
-    10x density baseline) + a HOT CITY of 6,000 keys on just 3 residues
-    (2,000 exactly-coincident points per site — the worst case for
-    eps-neighborhood counting, kNN tie handling, and per-cell join fanout).
-    Suppliers get 10,000 uniform keys; nation keeps TPC-H's 25 rows."""
-    n_bg, hot_sites, hot_per = 144_000, (17, 353, 771), 2_000
-    cust = list(range(1, n_bg + 1))
-    for r in hot_sites:
-        # j offset past the background range so keys stay unique
-        cust.extend(r + 1000 * j for j in range(200, 200 + hot_per))
-    nprng.shuffle(cust)
-    pq.write_table(pa.table({
-        "c_custkey": pa.array(cust, type=pa.int64()),
-        "c_name": pa.array([f"Customer#{k}" for k in cust], type=pa.string()),
-        "c_nationkey": pa.array((nprng.integers(0, 25, len(cust))).tolist(),
-                                type=pa.int32()),
-        "c_acctbal": pa.array(np.round(nprng.uniform(-999.99, 9999.99,
-                                                     len(cust)), 2)),
-        "c_mktsegment": pa.array([f"SEG{k % 5}" for k in cust], type=pa.string()),
-    }), f"{OUT}/customer.parquet")
-    sup = list(range(1, 10_001))
-    pq.write_table(pa.table({
-        "s_suppkey": pa.array(sup, type=pa.int64()),
-        "s_name": pa.array([f"Supplier#{k}" for k in sup], type=pa.string()),
-        "s_nationkey": pa.array((nprng.integers(0, 25, len(sup))).tolist(),
-                                type=pa.int32()),
-        "s_acctbal": pa.array(np.round(nprng.uniform(-999.99, 9999.99,
-                                                     len(sup)), 2)),
-    }), f"{OUT}/supplier.parquet")
-    pq.write_table(pa.table({
-        "n_nationkey": pa.array(list(range(25)), type=pa.int32()),
-        "n_name": pa.array([f"NATION{k}" for k in range(25)], type=pa.string()),
-        "n_regionkey": pa.array([k % 5 for k in range(25)], type=pa.int32()),
-    }), f"{OUT}/nation.parquet")
-
-
-def gen_tpch_rest(nprng):
-    """region/part/orders/lineitem at 10x sf0.1, completing the sf1 dir so
-    the FULL 225-query catalog runs (round-10 verdict ask #1). Mirrors the
-    driver tables' measured structure: p_retailprice = 900 + (key%1000)/10
-    exactly; quantity integer 1-50; discount 0.00-0.10 step .01; tax
-    0.00-0.08; extendedprice uniform(900, 105000) independent of quantity;
-    day-granular orderdate uniform 1995-01-01..2001-08-01; shipdate
-    independent uniform 1995-01-02..2001-11-04; 1-7 lines per order."""
-    pq.write_table(pa.table({
-        "r_regionkey": pa.array(list(range(5)), type=pa.int32()),
-        "r_name": pa.array(["AFRICA", "AMERICA", "ASIA", "EUROPE",
-                            "MIDDLE EAST"], type=pa.string()),
-    }), f"{OUT}/region.parquet")
-
-    n_part = 200_000
-    adjs = ["large", "hot", "blue", "old", "new", "red", "small", "dim"]
-    nouns = ["ring", "bolt", "plate", "rod", "gear", "cap", "pin", "nut"]
-    types = np.array(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
-                      "STANDARD"])
-    keys = np.arange(n_part, dtype=np.int64)
-    pq.write_table(pa.table({
-        "p_partkey": pa.array(keys, type=pa.int64()),
-        "p_name": pa.array([f"{adjs[nprng.integers(0, 8)]} "
-                            f"{nouns[nprng.integers(0, 8)]}"
-                            for _ in range(n_part)], type=pa.string()),
-        "p_brand": pa.array([f"Brand#{b}" for b in
-                             nprng.integers(0, 25, n_part)], type=pa.string()),
-        "p_type": pa.array(types[nprng.integers(0, 6, n_part)].tolist(),
-                           type=pa.string()),
-        "p_size": pa.array(nprng.integers(1, 51, n_part).astype(np.int32)),
-        "p_retailprice": pa.array(900.0 + (keys % 1000) / 10.0),
-    }), f"{OUT}/part.parquet")
-
-    n_ord = 1_500_000
-    okeys = np.arange(n_ord, dtype=np.int64)
-    day_us = 86_400_000_000
-    d0 = 788_918_400_000_000       # 1995-01-01 UTC epoch micros
-    n_days = 2_404                 # ..2001-08-01 inclusive
-    statuses = np.array(["O", "P", "F"])
-    prios = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
-                      "5-LOW"])
-    pq.write_table(pa.table({
-        "o_orderkey": pa.array(okeys, type=pa.int64()),
-        "o_custkey": pa.array(nprng.integers(0, 150_000, n_ord),
-                              type=pa.int64()),
-        "o_orderstatus": pa.array(statuses[nprng.integers(0, 3, n_ord)]
-                                  .tolist(), type=pa.string()),
-        "o_totalprice": pa.array(np.round(
-            nprng.uniform(1000.0, 500_000.0, n_ord), 2)),
-        "o_orderdate": pa.array(
-            d0 + nprng.integers(0, n_days, n_ord) * day_us,
-            type=pa.timestamp("us")),
-        "o_orderpriority": pa.array(prios[nprng.integers(0, 5, n_ord)]
-                                    .tolist(), type=pa.string()),
-    }), f"{OUT}/orders.parquet")
-
-    # lineitem: 1-7 lines per order (~6M rows), built columnar
-    per = nprng.integers(1, 8, n_ord)
-    l_orderkey = np.repeat(okeys, per)
-    n_li = len(l_orderkey)
-    linenumber = (np.arange(n_li) -
-                  np.repeat(np.cumsum(per) - per, per) + 1).astype(np.int32)
-    s0 = 789_004_800_000_000       # 1995-01-02
-    ship_days = 2_499              # ..2001-11-04
-    pq.write_table(pa.table({
-        "l_orderkey": pa.array(l_orderkey, type=pa.int64()),
-        "l_partkey": pa.array(nprng.integers(0, n_part, n_li),
-                              type=pa.int64()),
-        "l_suppkey": pa.array(nprng.integers(0, 10_000, n_li),
-                              type=pa.int64()),
-        "l_linenumber": pa.array(linenumber),
-        "l_quantity": pa.array(nprng.integers(1, 51, n_li)
-                               .astype(np.float64)),
-        "l_extendedprice": pa.array(np.round(
-            nprng.uniform(900.0, 105_000.0, n_li), 2)),
-        "l_discount": pa.array(nprng.integers(0, 11, n_li) / 100.0),
-        "l_tax": pa.array(nprng.integers(0, 9, n_li) / 100.0),
-        "l_returnflag": pa.array(
-            np.array(["A", "N", "R"])[nprng.integers(0, 3, n_li)].tolist(),
-            type=pa.string()),
-        "l_linestatus": pa.array(
-            np.array(["F", "O"])[nprng.integers(0, 2, n_li)].tolist(),
-            type=pa.string()),
-        "l_shipdate": pa.array(
-            s0 + nprng.integers(0, ship_days, n_li) * day_us,
-            type=pa.timestamp("us")),
-    }), f"{OUT}/lineitem.parquet")
-    return n_li
-
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                "..", "graftbench"))
+import gen  # noqa: E402
 
 if __name__ == "__main__":
-    os.makedirs(OUT, exist_ok=True)
-    gen_documents(random.Random(SEED))
-    gen_embeddings(np.random.default_rng(SEED))
-    gen_events(np.random.default_rng(SEED + 1))
-    gen_spatial(np.random.default_rng(SEED + 2))
-    n_li = gen_tpch_rest(np.random.default_rng(SEED + 3))
-    print(f"wrote {OUT}/documents.parquet (50k), embeddings.parquet (20k), "
-          "events.parquet (1M), customer.parquet (150k incl. 3x2000 "
-          "coincident hot-city sites), supplier.parquet (10k), nation.parquet (25), "
-          f"region (5), part (200k), orders (1.5M), lineitem ({n_li})")
+    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft_sf1"
+    gen.generate(out, gen.DEFAULT_SEED, 1.0)
+    print(f"wrote {out}/{{documents,embeddings,events,customer,supplier,"
+          "nation,region,part,orders,lineitem}.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of selected queries
   * so shuffle/broadcast/pushdown/codegen claims can be inspected per round.
   * `runMain graft.Explain [sfDir] [query...]` — defaults to a set of
@@ -21,11 +19,7 @@ object Explain {
         "q147_dbscan_predict", "q151_interval_store_join",
         "q152_interval_store_filter", "q154_dbscan_model_store",
         "q156_dbscan_vec")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"==== PLAN $n ====")

@@ -149,16 +149,6 @@ private[graft] object SimhashOracle {
   private def pow2Values: String =
     (0 until 64).map(b => s"($b, ${hl(BigInt(1) << b)})").mkString(", ")
 
-  /** Per-token xxh64 probe query (differential-tested against
-    * [[graft.functions.TextOps.hashUtf8]] in DedupSpec's dev check):
-    * returns (doc_id, h) for a VALUES list of (doc_id, t). */
-  private[graft] def probeSql(values: Seq[(Int, String)]): String = {
-    val vs = values.map { case (id, t) =>
-      s"($id, '${t.replace("'", "''")}')" }.mkString(", ")
-    s"WITH ${hashCtes(s"(VALUES $vs) AS __probe(doc_id, t)")}\n" +
-      "SELECT doc_id, h::VARCHAR AS h FROM __hash ORDER BY doc_id"
-  }
-
   /** The full q16 oracle: near-dup pairs with hamming(simhash) <= maxHam. */
   def sql(maxHam: Int): String =
     s"""WITH ${hashCtes("(SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)")},

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.stf
 import graft.operators._
+import graft.plans.Spread
 import graft.sources.{CellStore, IndexStore}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -2023,7 +2024,7 @@ object SparkEntry {
       // spread 1.81/1.94 s vs r14 per-kernel spreads 1.81/1.26 s. The
       // blocks live until the caller's action completes (one text-sized
       // copy; the bench/verify harness unpersists between queries).
-      val docs = Dedup.spread(Tables.load(s, dir, "documents")
+      val docs = Spread(Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))).localCheckpoint()
       val withQ = TextAnalysis.withQuality(docs, col("text"))
       val withF = TextAnalysis.withBigramFluency(withQ, col("doc_id"), col("text"))

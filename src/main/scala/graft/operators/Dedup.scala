@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GraftFunctions, stf}
+import graft.plans.Spread
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -30,49 +31,6 @@ object Dedup {
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("dup_count"))
 
   /**
-   * Spread an under-partitioned input to session parallelism BEFORE an
-   * expensive per-row kernel (shingling, minhash signatures, hyperplane
-   * buckets, O(n²) refines). A small parquet file arrives as ONE scan
-   * partition (row-group granularity), which would run the whole kernel
-   * single-threaded; the repartition moves only the raw input rows — cheap
-   * exactly when it fires.
-   *
-   * The partition count is inspected WITHOUT executing anything: only
-   * exchange-free single-leaf plans (scan → project/filter chains) are
-   * considered — their leaf partition count is known at planning time.
-   * Anything with an upstream shuffle already carries
-   * `spark.sql.shuffle.partitions` and is left alone; critically, probing
-   * such a plan via `df.rdd` would force AQE to materialize every upstream
-   * stage just to learn the count, and the returned plan would then run
-   * them all a second time.
-   */
-  private[graft] def spread(df: DataFrame): DataFrame = {
-    // a streaming frame cannot be batch-planned (and its micro-batch
-    // partitioning is the source's business) — pass it through untouched
-    if (df.isStreaming) return df
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.sparkPlan
-    // any number of leaves (r15): a UNION of narrow scan legs is still
-    // exchange-free and its partitioning is the concatenation of the legs,
-    // so the input partition count is the SUM of the leaf counts — the
-    // single-leaf-only rule left q234's (odd ∪ perturbed) probe batch at
-    // 2 partitions, which serialized the whole fused gate pipeline into
-    // 2 tasks at sf1 (~100M dot products, 22.1 s vs 9.9 s baseline).
-    val leafParts = plan.collectLeaves() match {
-      case leaves if leaves.nonEmpty && plan.find(
-          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]).isEmpty =>
-        // leaf execute() builds the scan RDD lazily — no job is submitted
-        try Some(leaves.map(_.execute().getNumPartitions).sum)
-        catch { case _: Throwable => None }
-      case _ => None
-    }
-    leafParts match {
-      case Some(n) if n < par => df.repartition(par)
-      case _ => df
-    }
-  }
-
-  /**
    * Free the executor blocks behind an eagerly localCheckpoint-ed
    * DataFrame. Safe ONLY once nothing will read it again (a local
    * checkpoint has no lineage to recompute from) — callers release the
@@ -89,7 +47,7 @@ object Dedup {
   /** (id, shingles, n_shingles) prep used by the Jaccard family. */
   private[graft] def shingled(df: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    spread(df.select(idCol.as("__id"), textCol.as("__t")))
+    Spread(df.select(idCol.as("__id"), textCol.as("__t")))
       .select(col("__id"), TextAnalysis.shingles(col("__t"), n).as("__sh"))
       .withColumn("__sz", size(col("__sh")))
       .filter(col("__sz") > 0)
@@ -985,7 +943,7 @@ object Dedup {
     val params = graft.sources.Sidecar
       .readText(spark, path + "/_graft_coslsh_params").trim.split(" ")
     val (tables, planes) = (params(0).toInt, params(1).toInt)
-    val v = spread(batch.select(idCol.as("__id"), vecCol.as("__vec")))
+    val v = Spread(batch.select(idCol.as("__id"), vecCol.as("__vec")))
       .localCheckpoint()
     v.select(col("__id").as("id"),
         explode(stf.hyperplane_buckets(col("__vec"), tables, planes)).as("bucket"))
@@ -1039,7 +997,7 @@ object Dedup {
     val spark = corpus.sparkSession
     graft.sources.Sidecar.invalidateMarker(spark, path)
     dropTombstones(spark, path) // a rebuild starts with a clean slate
-    val v = spread(corpus.select(idCol.as("__id"), vecCol.as("__vec")))
+    val v = Spread(corpus.select(idCol.as("__id"), vecCol.as("__vec")))
       .localCheckpoint() // two writes below read it — warm, not racing
     // planes = 0 ⇒ size from the store itself (one count over the already-
     // materialized checkpoint); the RESOLVED value lands in the sidecar,
@@ -1091,7 +1049,7 @@ object Dedup {
     // task computing all ~600M dot products (jstack: a single runnable
     // worker in VecOps.dotF). The spread moves only the raw probe rows
     // and gives the fused stage session parallelism.
-    val v = spread(batch.select(idCol.as("__cl_id"), vecCol.as("__cl_vec")))
+    val v = Spread(batch.select(idCol.as("__cl_id"), vecCol.as("__cl_vec")))
       .withColumn("__cl_nrm", stf.vec_norm(col("__cl_vec")))
     val banded = v.select(col("__cl_id"),
       explode(stf.hyperplane_buckets(col("__cl_vec"), tables, planes)).as("__cl_bucket"))
@@ -1143,7 +1101,7 @@ object Dedup {
   def cosinePairsExact(df: DataFrame, idCol: Column, vecCol: Column,
                        threshold: Double): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val v = spread(df.select(idCol.as("__id"), vecCol.as("__vec")))
+    val v = Spread(df.select(idCol.as("__id"), vecCol.as("__vec")))
       .withColumn("__nrm", stf.vec_norm(col("__vec")))
     val n = v.count()
     require(n <= CosineExactBound,
@@ -1164,7 +1122,7 @@ object Dedup {
                      threshold: Double, tables: Int = 8, planes: Int = 8,
                      maxBucket: Int = MaxLshBucket): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val v = spread(df.select(idCol.as("__id"), vecCol.as("__vec")))
+    val v = Spread(df.select(idCol.as("__id"), vecCol.as("__vec")))
     // planes = 0 ⇒ the measured [[autoPlanes]] rule on the actual corpus
     // (costs one count job — the price of not knowing the size)
     val planesR = if (planes == 0) autoPlanes(v.count()) else planes

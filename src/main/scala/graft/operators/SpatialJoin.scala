@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{GeoOps, GraftFunctions, stf}
+import graft.plans.Spread
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
@@ -56,11 +57,11 @@ object SpatialJoin {
     // spread under-partitioned inputs before the cell explode (r15): when
     // one side broadcasts, the other side's explode+join+refine fuses into
     // one codegen stage at the raw scan's task count (1-3 tasks at sf1 —
-    // 8c/32c ratio ≈ 1.0, the work was serial). Dedup.spread is a no-op
+    // 8c/32c ratio ≈ 1.0, the work was serial). Spread is a no-op
     // for already-shuffled or wide-enough inputs, so nothing changes at
     // production partition counts.
-    val l = Dedup.spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs)))
-    val r = Dedup.spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
+    val l = Spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs)))
+    val r = Spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
     l.join(r,
         l("__gcell_l") === r("__gcell_r") &&
         pred.apply(leftCol, rightCol) &&
@@ -81,8 +82,8 @@ object SpatialJoin {
     // floor on the SQL path.
     val cs = lit(math.max(cellSize, maxDist))
     // spread before the explode — same rationale as [[join]] (r15)
-    val l = Dedup.spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs, lit(maxDist))))
-    val r = Dedup.spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
+    val l = Spread(left).withColumn("__gcell_l", explode(stf.st_cells(leftCol, cs, lit(maxDist))))
+    val r = Spread(right).withColumn("__gcell_r", explode(stf.st_cells(rightCol, cs)))
     l.join(r,
         l("__gcell_l") === r("__gcell_r") &&
         stf.st_within_distance(leftCol, rightCol, lit(maxDist)) &&

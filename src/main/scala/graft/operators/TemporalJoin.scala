@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Spread
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -82,11 +83,11 @@ object TemporalJoin {
     // spread under-partitioned inputs before the bucket explode (r15):
     // when one side broadcasts, the other side's explode+join+refine
     // fuses into one codegen stage at the raw scan's task count (q42 at
-    // sf1: 1-3 runnable tasks, 8c/32c ratio ≈ 1.0). Dedup.spread no-ops
+    // sf1: 1-3 runnable tasks, 8c/32c ratio ≈ 1.0). Spread no-ops
     // for already-shuffled or wide-enough inputs.
-    val l = Dedup.spread(left).withColumn("__tb_l",
+    val l = Spread(left).withColumn("__tb_l",
       explode(sequence(bucketOf(lStart, bucketR), bucketOf(lEnd, bucketR))))
-    val r = Dedup.spread(right).withColumn("__tb_r",
+    val r = Spread(right).withColumn("__tb_r",
       explode(sequence(bucketOf(rStart, bucketR), bucketOf(rEnd, bucketR))))
     l.join(r,
         l("__tb_l") === r("__tb_r") &&

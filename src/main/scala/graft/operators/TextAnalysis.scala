@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.Spread
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -135,7 +136,7 @@ object TextAnalysis {
       val distinctN = element_at(st, n) // slot 2 = 2-grams, slot 3 = 3-grams
       when(total > 0, e6(total - distinctN, total)).otherwise(0L)
     }
-    Dedup.spread(df).withColumn("dup_2gram_e6", dupFrac(2))
+    Spread(df).withColumn("dup_2gram_e6", dupFrac(2))
       .withColumn("dup_3gram_e6", dupFrac(3))
       .withColumn("top_token_e6",
         when(nTok > 0, e6(element_at(st, 4), nTok)).otherwise(0L))
@@ -525,7 +526,7 @@ object TextAnalysis {
       val B = b.cast(org.apache.spark.sql.types.DecimalType(38, 0))
       ((A - pmod(A, B)) / B).cast("long")
     }
-    val toks = Dedup.spread(
+    val toks = Spread(
       df.select(idCol.as("__bf_id"), tokens(textCol).as("__bf_ws")))
     val uni = toks.select(explode(col("__bf_ws")).as("__bf_w"))
       .groupBy(col("__bf_w")).agg(count(lit(1)).as("__bf_u"))
@@ -569,7 +570,7 @@ object TextAnalysis {
   def buildLmStore(docs: DataFrame, path: String, textCol: Column): Unit = {
     val spark = docs.sparkSession
     graft.sources.Sidecar.invalidateMarker(spark, path)
-    val toks = Dedup.spread(docs.select(tokens(textCol).as("__lm_ws")))
+    val toks = Spread(docs.select(tokens(textCol).as("__lm_ws")))
     toks.select(explode(col("__lm_ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("u"))
       .repartitionByRange(col("w")).sortWithinPartitions(col("w"))
@@ -616,7 +617,7 @@ object TextAnalysis {
       s"appendLmBatch: $path holds a buildLmStore flat store whose " +
       "vocabulary sidecar cannot absorb appends — rebuild it segmented " +
       "(appendLmBatch from an empty path) or keep rebuilding flat")
-    val toks = Dedup.spread(
+    val toks = Spread(
       docs.select(tokens(textCol).as("__lm_ws"))).localCheckpoint()
     toks.select(explode(col("__lm_ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("u"))
@@ -670,7 +671,7 @@ object TextAnalysis {
       "appendLmBatch (or rebuild flat without the deleted docs)")
     require(batchId >= 0, s"deleteFromLmStore: batchId must be >= 0, got $batchId")
     val segId = -batchId - 1
-    val toks = Dedup.spread(
+    val toks = Spread(
       docs.select(tokens(textCol).as("__lm_ws"))).localCheckpoint()
     toks.select(explode(col("__lm_ws")).as("w"))
       .groupBy(col("w")).agg((-count(lit(1))).as("u"))
@@ -796,7 +797,7 @@ object TextAnalysis {
       slice(ws, lit(1), greatest(n - 1, lit(0))),
       slice(ws, lit(2), greatest(n - 1, lit(0))),
       (a, b) => struct(a.as("w1"), b.as("w2")))
-    val docBi = Dedup.spread(
+    val docBi = Spread(
         df.select(idCol.as("__bf_id"), tokens(textCol).as("__bf_ws")))
       .select(col("__bf_id"), explode(pairs).as("__bf_p"))
       .select(col("__bf_id"), col("__bf_p.w1").as("__bf_w1"), col("__bf_p.w2").as("__bf_w2"))
@@ -909,7 +910,7 @@ object TextAnalysis {
    */
   def withTrigramFluency(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
     requireNoTrigramCols(df, "withTrigramFluency")
-    val toks = Dedup.spread(
+    val toks = Spread(
       df.select(idCol.as("__tf_id"), tokens(textCol).as("__tf_ws")))
     val uni = toks.select(explode(col("__tf_ws")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("u"))
@@ -983,7 +984,7 @@ object TextAnalysis {
                                 path: String): DataFrame = {
     requireNoTrigramCols(df, "withTrigramFluencyIndexed")
     val (uni, bi, tri, nRow) = loadLmModel3(df.sparkSession, path)
-    val docTri = Dedup.spread(
+    val docTri = Spread(
         df.select(idCol.as("__tf_id"), tokens(textCol).as("__tf_ws")))
       .select(col("__tf_id"), explode(triples(col("__tf_ws"))).as("p"))
       .select(col("__tf_id"), col("p.w1").as("__tf_w1"),
@@ -1017,7 +1018,7 @@ object TextAnalysis {
       c.equalsIgnoreCase("n_dup_spans")),
       "withDuplicatedSpans: input must not contain columns named " +
       "__ds_id/__ds_g/__ds_n or the output names n_spans/n_dup_spans")
-    val spans = Dedup.spread(df.select(idCol.as("__ds_id"), textCol.as("__ds_t")))
+    val spans = Spread(df.select(idCol.as("__ds_id"), textCol.as("__ds_t")))
       .select(col("__ds_id"), explode(shingles(col("__ds_t"), k)).as("__ds_g"))
     // docs-per-span; spans are distinct within a doc, so count = doc count
     val counts = spans.groupBy(col("__ds_g")).agg(count(lit(1)).as("__ds_n"))
@@ -1039,7 +1040,7 @@ object TextAnalysis {
   private def dupSpanCoverage(df: DataFrame, idCol: Column, textCol: Column,
                               k: Int, minDocs: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val base = Dedup.spread(
+    val base = Spread(
       df.select(idCol.as("__rs_id"), split(textCol, " ").as("__rs_ws")))
     // all span occurrences with their 0-based start token index
     val occ = base

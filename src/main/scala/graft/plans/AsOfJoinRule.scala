@@ -122,39 +122,16 @@ object AsOfJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** Re-entrancy guard: the probe's own queries pass through the
-    * optimizer and must not recursively probe. */
-  private val inSampling = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
-  }
-
-  /** Probe-verdict memo (r15, guide §1.2 — compute once): the verdict is
-    * a pure function of (canonicalized children, keys, threshold), but a
-    * query is planned repeatedly (explain + execute, re-runs of the same
-    * statement), and each planning pass re-ran the two sample jobs —
-    * ~0.2 s of plan-time per pass that regressed q240 0.39→0.61 s when
-    * the gate landed (r14 verdict). Keyed on semantic hashes; a collision
-    * merely swaps which of two RESULT-IDENTICAL plans runs (the probe is
-    * best-effort by contract, and both the rewrite and the original plan
-    * compute the same rows). Bounded: cleared past 256 entries. Stale
-    * only if the same canonical scan's data changes mid-session — the
-    * same staleness window Catalyst's own relation stat caches have. */
-  private val probeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Double), java.lang.Boolean]()
-
+  /** Memoized through [[PlanProbe]]; inside another probe, or if the
+    * probe fails, the gate passes and the rewrite goes ahead. */
   private def hotKeyDeclines(s: Shape): Boolean = {
     val share = maxKeyShare
-    if (share >= 1.0 || inSampling.get) return false
+    if (share >= 1.0) return false
     val spark = org.apache.spark.sql.SparkSession.getActiveSession
       .getOrElse(return false)
-    val memoKey = (s.j.left.semanticHash(), s.j.right.semanticHash(),
-      s.keys.map { case (l, r) => (l.semanticHash(), r.semanticHash()) }.hashCode(),
-      share)
-    val hit = probeMemo.get(memoKey)
-    if (hit != null) return hit.booleanValue()
-    inSampling.set(true)
-    val verdict =
-    try {
+    val key = (PlanProbe.key(s.j.left, s.keys.map(_._1): _*),
+      PlanProbe.key(s.j.right, s.keys.map(_._2): _*), share)
+    PlanProbe.memo("AsOfJoinRule", key, fallback = false) {
       def sampleKeys(child: LogicalPlan, keys: Seq[Expression]): Seq[Seq[Any]] = {
         val proj = keys.zipWithIndex.map { case (k, i) => Alias(k, s"__ak_$i")() }
         spark.sessionState.executePlan(
@@ -165,29 +142,19 @@ object AsOfJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       }
       val all = sampleKeys(s.j.left, s.keys.map(_._1)) ++
         sampleKeys(s.j.right, s.keys.map(_._2))
-      if (all.size < HotKeyMinSample) false
-      else {
+      all.size >= HotKeyMinSample && {
         val top = all.groupBy(identity).valuesIterator.map(_.size).max
         val frac = top.toDouble / all.size
-        if (frac > share) {
+        if (frac > share)
           logWarning(f"AsOfJoinRule: declining the rewrite — one join key " +
             f"holds $frac%.2f of a ${all.size}-row sample (threshold " +
             f"$share%.2f, spark.graft.join.asofMaxKeyShare): the rewritten " +
             "window would funnel that key into one task. Use the typed " +
             "graft.operators.TemporalJoin.asOfKeyed (range-partitioned, " +
             "skew-proof) or raise the threshold to force the rewrite.")
-          true
-        } else false
+        frac > share
       }
-    } catch {
-      case t: Throwable =>
-        logWarning(s"AsOfJoinRule: hot-key probe failed ($t) — proceeding " +
-          "with the rewrite")
-        false
-    } finally inSampling.set(false)
-    if (probeMemo.size > 256) probeMemo.clear()
-    probeMemo.put(memoKey, verdict)
-    verdict
+    }.getOrElse(false)
   }
 
   /** BLAST RADIUS of the session-wide flag: while set, EVERY query in the

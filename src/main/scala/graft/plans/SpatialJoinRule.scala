@@ -89,17 +89,14 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
         val cellL = AttributeReference("__gcell_l", LongType, nullable = false)()
         val cellR = AttributeReference("__gcell_r", LongType, nullable = false)()
-        // spread under-partitioned children before the explode (r15): when
-        // one side broadcasts, the other side's explode+join+refine fuses
-        // onto the raw scan's task count — see SpreadNarrow (no-op for
+        // spread under-partitioned children before the explode: when one
+        // side broadcasts, the other side's explode+join+refine fuses onto
+        // the raw scan's task count — see Spread (no-op for
         // already-shuffled or wide-enough children).
-        val (lIn, rIn) = org.apache.spark.sql.SparkSession.getActiveSession
-          .map(sp => (SpreadNarrow(sp, left), SpreadNarrow(sp, right)))
-          .getOrElse((left, right))
         val genL = Generate(Explode(STCells(le, cs, rad)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellL), child = lIn)
+          qualifier = None, generatorOutput = Seq(cellL), child = Spread(left))
         val genR = Generate(Explode(STCells(re, cs, zero)), Nil, outer = false,
-          qualifier = None, generatorOutput = Seq(cellR), child = rIn)
+          qualifier = None, generatorOutput = Seq(cellR), child = Spread(right))
 
         val newCond = (EqualTo(cellL, cellR) +: pred +:
           STRefCell(Seq(le, re, cs, cellL, rad)) +: rest).reduce(And)

@@ -233,7 +233,40 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       assert(plan.contains("BroadcastNestedLoopJoin") ||
         plan.contains("CartesianProduct"), plan.take(800))
       assert(df.collect().isEmpty)
+      // the decline is memoized like a chosen bucket: planning the same
+      // statement again runs no sampling job, also over views registered
+      // again (fresh expression ids, as a re-built query has)
+      val sql = "SELECT id_a, id_b FROM rja JOIN rj_nullb ON sa <= eb AND sb <= ea"
+      jobsDuring(spark.sql(sql).queryExecution.optimizedPlan)
+      assert(jobsDuring(spark.sql(sql).queryExecution.optimizedPlan) == 0)
+      mkViews()
+      spark.read.parquet(tmp).createOrReplaceTempView("rj_nullb")
+      assert(jobsDuring(spark.sql(sql).queryExecution.optimizedPlan) == 0)
     }
+  }
+
+  /** Jobs started while `f` runs. A marker job afterwards flushes the
+    * listener queue (events arrive in order), so the count is exact. */
+  private def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-during-marker-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => tag == p.getProperty("spark.job.description")))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 
   test("plan-time stats decline: provably cap-wide spans run the original join instead of erroring") {
